@@ -14,7 +14,9 @@ geodesic area). Here:
   generated away from decision boundaries);
 * WKB encoding needs raw IEEE-754 little-endian bytes, which Spark SQL
   cannot express — that single step is an Arrow-batched pandas UDF over
-  numpy views (the sanctioned slow path).
+  numpy views (the sanctioned slow path). In the POI pipeline's executed
+  plan it is the only Python operator besides the PBF decode (the
+  ``osmpbf`` BatchScan).
 
 Rings are ``ARRAY<STRUCT<lon: DOUBLE, lat: DOUBLE>>``, closed
 (first == last vertex).
@@ -348,6 +350,15 @@ def assemble_rings(way_nodes: DataFrame, nodes: DataFrame) -> DataFrame:
     bucketed by their join keys (see sources module); the assembly itself
     is one sort-merge join + one hash aggregate, with collect_list bounded
     by per-way vertex counts (~2k max in OSM).
+
+    WARNING: ``way_nodes`` must hold ONE version per way. Rows are grouped
+    by ``way_id`` only, so feeding every version of a way (e.g.
+    ``posexplode(refs)`` over an un-deduplicated scan, as
+    ``osm_poi_pipeline_full`` and its oracle's ``wr`` CTE both do) merges
+    their refs into one ring with each vertex repeated: a 3-ref A-B-A way
+    with two versions becomes a 6-point ring that passes the closed,
+    ≥4-point validity test. Because the oracle merges the same way, the
+    oracle check cannot see it. Deduplicate the ways before exploding.
     """
     joined = way_nodes.join(
         nodes.select(

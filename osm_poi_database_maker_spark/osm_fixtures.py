@@ -267,7 +267,15 @@ def ways_df(spark: SparkSession) -> DataFrame:
 
 
 def taginfo_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TAGINFO, "key string, value string, count long, in_wiki boolean")
+    """TAGINFO as an inline ``VALUES`` table, i.e. a LocalRelation: the
+    TOI dimension's source needs no Python RDD job (``createDataFrame``
+    of a list plans as a Python-fed ``Scan ExistingRDD``)."""
+
+    def lit(s: str) -> str:
+        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    rows = ", ".join(f"({lit(k)}, {lit(v)}, {c}L, {w})" for (k, v, c, w) in TAGINFO)
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS t(key, value, count, in_wiki)")
 
 
 _RELATION_SCHEMA = (

@@ -11,9 +11,15 @@ Composable transforms mirroring the reference's end-to-end flow
     poi_ways           way branch: cascade + ring validity + area/centroid
     ways_to_centroids  O18: small polygons → point POIs in the +36e9 id space
 
-All predicates are column expressions; the TOI dimension is broadcast; the
-only Python-UDF step is WKB byte encoding. Every transform returns a plain
-DataFrame so Catalyst fuses the cascade into one stage over the scan.
+All predicates are column expressions and the TOI dimension, built from
+a LocalRelation, is broadcast; past the PBF decode, the only Python step is
+WKB byte encoding (an Arrow-batched pandas UDF). Within a branch Catalyst
+fuses the cascade into the stage over the scan. The branch outputs,
+:func:`poi_nodes` and :func:`poi_ways`, are lazy local checkpoints: the
+first action evaluates the branch once and every later sink of the same
+run (routed write, COPY text, centroids) reads those rows, so a run
+decodes each branch once and all sinks agree on dedup tie-breaks.
+Shuffle stages below the checkpoint run when the branch is composed.
 """
 
 from __future__ import annotations
@@ -136,7 +142,7 @@ def poi_nodes(nodes: DataFrame, taginfo: DataFrame, settings: Settings) -> DataF
     """Node branch of EP1: dedup → cascade → WKB point geometry with the
     O7 NULL-on-invalid contract → projection. Output columns:
     (id, version, user_id, tstamp, changeset_id, tags_hstore, lon, lat,
-    geom hex-WKB)."""
+    geom hex-WKB). Returned as a lazy local checkpoint (module doc)."""
     dim = build_toi_dim(taginfo, settings)
     filtered = poi_filter(dedup_latest(nodes), dim, settings)
     with_geom = filtered.withColumn(
@@ -146,7 +152,7 @@ def poi_nodes(nodes: DataFrame, taginfo: DataFrame, settings: Settings) -> DataF
             geo.wkb_point_hex(F.col("lon"), F.col("lat")),
         ),
     ).filter(F.col("geom").isNotNull())
-    return _projection(with_geom, settings)
+    return _projection(with_geom, settings).localCheckpoint(eager=False)
 
 
 def quarantined_nodes(nodes: DataFrame) -> DataFrame:
@@ -160,7 +166,8 @@ def poi_ways(ways: DataFrame, taginfo: DataFrame, settings: Settings) -> DataFra
     """Way branch of EP1: dedup → cascade → ring validity (closed, ≥4
     points — osmium's area-assembly contract) → spherical area + planar
     centroid columns. Returns rows with ``ring``, ``area_m2``,
-    ``centroid`` for downstream sinks / centroid conversion."""
+    ``centroid`` for downstream sinks / centroid conversion, as a lazy
+    local checkpoint (module doc)."""
     if settings.skip_ways:
         return ways.limit(0)
     dim = build_toi_dim(taginfo, settings)
@@ -179,6 +186,7 @@ def poi_ways(ways: DataFrame, taginfo: DataFrame, settings: Settings) -> DataFra
         filtered.filter(valid)
         .withColumn("area_m2", geo.ring_area_sphere_m2(ring))
         .withColumn("centroid", geo.ring_centroid(ring))
+        .localCheckpoint(eager=False)
     )
 
 

@@ -53,8 +53,9 @@ _MODULES = (
 # verification priority, rotated every round so the union of rounds covers
 # the whole registry:
 #
-#   tier 1 — queries new this round, or whose implementation/oracle
-#            changed this round, so they need a fresh driver row;
+#   tier 1 — CHANGED_THIS_ROUND: queries new this round, or whose
+#            implementation/oracle changed this round, so they need a
+#            fresh driver row (tests assert they lead the window);
 #   tier 2 — queries whose only driver evidence is ≥2 rounds old, stalest
 #            first (testdata regenerates between rounds, so old rows decay);
 #   tier 3 — green in the latest round, unchanged; they fill the remaining
@@ -62,10 +63,26 @@ _MODULES = (
 #
 # Every registered query keeps a pytest + tools/check.py local gate
 # regardless of window position.
+CHANGED_THIS_ROUND = (
+    # single-pass POI ETL: checkpointed poi_nodes/poi_ways, the TOI
+    # source as a VALUES table, Arrow batches out of the osmpbf source
+    "osm_poi_pipeline_full",
+    "osm_poi_nodes",
+    "osm_poi_nodes_noname",
+    "osm_ways_centroids",
+    "osm_mp_centroids",
+    "osm_relation_areas",
+    "osm_toi_dim",
+    "osm_pbf_source_scan",
+    # changed last round with no driver row yet
+    "doc_dsir_importance",
+    "customer_edit_pairs",
+    "stream_bloom_admit",
+)
 _VERIFY_FIRST = [
-    # tier 1a (round 15): queries whose implementation changed this
-    # round — every one needs a fresh driver row on the final tree.
-    # iterative-graph shape cuts (fewer tiny stages, same values):
+    *CHANGED_THIS_ROUND,
+    # the round-15 window, in its order (its tier-1a changes got driver
+    # rows there): iterative-graph shape cuts (fewer tiny stages):
     "doc_graph_pagerank",
     "doc_graph_kcore",
     # _range_pid boundary-sample memoization + quantile window fuse:
@@ -77,7 +94,7 @@ _VERIFY_FIRST = [
     "part_promo_share",
     "brand_returnflag_pivot",
     "orders_snapshot_diff",
-    # tier 1b: the six r08-stale queries carried from the r14 rotation
+    # the six r08-stale queries carried from the r14 rotation
     # (r14 verdict item 2) — the stalest driver evidence in the registry:
     "customer_km_survival",
     "orders_dow_chisq",
@@ -85,7 +102,7 @@ _VERIFY_FIRST = [
     "nation_forecast_backtest",
     "brand_weighted_median",
     "supplier_return_pchart",
-    # tier 2 (r14 verdict item 2): r14-optimized queries whose window
+    # (r14 verdict item 2) r14-optimized queries whose window
     # slot predated the optimization session, so their post-change
     # evidence is builder-local only. Plan-shape changes first:
     "orders_column_profile",
@@ -106,15 +123,12 @@ _VERIFY_FIRST = [
     "emb_ivf_pq_topk",
     "emb_binary_quantize_recall",
     "emb_split_leakage",
-    "osm_poi_pipeline_full",
-    "osm_poi_nodes",
     "events_toi_pipeline",
     "events_hstore_projection",
     "late_sole_supplier_orders",
     "events_salted_hot_join",
-    # tier 3: the r14 trailing-sort removals (strict-subset plan change,
-    # lowest risk) — 11 of 12 fit this window; stream_bloom_admit
-    # carries to r16 (its batch twin events_bloom_admit is gated here):
+    # the r14 trailing-sort removals (strict-subset plan change,
+    # lowest risk); stream_bloom_admit is in tier 1:
     "product_type_profit",
     "important_part_stock",
     "shipping_lag_buckets",
@@ -127,9 +141,6 @@ _VERIFY_FIRST = [
     "emb_srp_lsh_pairs",
     "events_benford_deviation",
 ]
-# r16 rotation TODO: stream_bloom_admit (the one r14 sort-removal that
-# missed this window), then the stalest cohort by tools/staleness.py
-# (r09 evidence ages out next).
 
 
 # tier 4 cohort order: non-core modules first, core last.

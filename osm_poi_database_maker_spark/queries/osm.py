@@ -1179,7 +1179,7 @@ ORACLE_POINT_IN_POLYGON = _pip_oracle_sql().replace(
 
 
 def q_osm_poi_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's REAL deliverable as ONE Catalyst DAG (r8 verdict
+    """The reference's REAL deliverable as one composition (r8 verdict
     #6): the whole EP1 cascade (filter.py:255-269) — PBF wire scan (O1)
     → dedup (O13) → empty-tags / exclude-superset / TOI-threshold
     filters (O3→O5→O6, O4 off by default like the reference) → relation
@@ -1201,16 +1201,18 @@ def q_osm_poi_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan feeds both branches; the only shuffles are the ring
     assembly join/agg (bucketable on node_id/way_id at 100 TB) and the
     broadcast TOI semi-join — the cheap map-side predicates fuse into
-    the scan stage."""
+    the scan stage. Each branch ends in a local checkpoint, so the
+    routed rows are one Catalyst DAG per branch, joined by a union."""
+    return poi_pipeline_routed(spark, _ep1_fixture_pbf())
+
+
+def _ep1_fixture_pbf() -> str:
+    """The EP1 cascade fixture as a .osm.pbf file; returns its path."""
     import hashlib
     import os
     import tempfile
 
     from .. import pbf
-    from ..ops import tags as tag_ops
-    from ..pbf_datasource import register
-    from ..pipeline import route_pois
-    from ..sink import copy_line
 
     # Key the fixture file by a content hash (stale files from an older
     # fixture version can never be reused) and write atomically (encode
@@ -1235,6 +1237,20 @@ def q_osm_poi_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             block_size=7,
         )
         os.rename(tmp, path)
+    return path
+
+
+def poi_pipeline_routed(spark: SparkSession, path: str) -> DataFrame:
+    """The EP1 composition of :func:`q_osm_poi_pipeline_full` over any
+    .osm.pbf path: one ``osmpbf`` load feeds both branches, and the
+    routed rows are built from the :func:`poi_nodes` / :func:`poi_ways`
+    outputs, so every action on the result after the first reads
+    their local checkpoints instead of re-decoding the file."""
+    from ..ops import tags as tag_ops
+    from ..pbf_datasource import register
+    from ..pipeline import route_pois
+    from ..sink import copy_line
+
     register(spark)
     scan = spark.read.format("osmpbf").option("blobspertask", "1").load(path)
     taginfo = fx.taginfo_df(spark)

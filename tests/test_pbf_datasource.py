@@ -120,3 +120,16 @@ def test_datasource_name_and_schema():
     assert OsmPbfDataSource.name() == "osmpbf"
     src = OsmPbfDataSource(options={"path": "x"})
     assert "osm_type string" in src.schema()
+
+
+def test_union_of_type_branches_over_one_load(spark, pbf_file):
+    """Two branches of ONE load, filtered to different osm_types and
+    unioned in one query, must each read their own rows. A reader that
+    accepted pushed filters would be shared by both scans of the load
+    and return one branch's rows twice (module docstring)."""
+    register(spark)
+    scan = spark.read.format("osmpbf").load(pbf_file)
+    nodes = scan.filter(F.col("osm_type") == "node").select("osm_type", "id")
+    ways = scan.filter(F.col("osm_type") == "way").select("osm_type", "id")
+    got = sorted(tuple(r) for r in nodes.unionByName(ways).collect())
+    assert got == [("node", i) for i in range(25)] + [("way", 100 + w) for w in range(5)]

@@ -3,8 +3,12 @@
 from __future__ import annotations
 
 import dataclasses
+import os
+
+import duckdb
 
 from osm_poi_database_maker_spark import osm_fixtures as fx
+from osm_poi_database_maker_spark import pbf
 from osm_poi_database_maker_spark.pipeline import (
     build_toi_dim,
     dedup_latest,
@@ -13,7 +17,11 @@ from osm_poi_database_maker_spark.pipeline import (
     quarantined_nodes,
     ways_to_centroids,
 )
-from osm_poi_database_maker_spark.queries.osm import SETTINGS
+from osm_poi_database_maker_spark.queries.osm import (
+    ORACLE_POI_PIPELINE_FULL,
+    SETTINGS,
+    poi_pipeline_routed,
+)
 
 
 def test_toi_dim_semantics(spark):
@@ -72,3 +80,45 @@ def test_ways_to_centroids(spark):
     # large way 101 kept as polygon, not centroid
     kept = {r.id for r in pw.collect()}
     assert 101 in kept and 103 not in kept and 104 not in kept
+
+
+def _write_ep1(path, nodes=None, ways=None):
+    pbf.encode_pbf(
+        path,
+        nodes=fx.ep1_pbf_nodes() if nodes is None else nodes,
+        ways=fx.ep1_pbf_ways() if ways is None else ways,
+        relations=[],
+        block_size=7,
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_sinks_share_one_branch_evaluation(spark, tmp_path):
+    """poi_nodes / poi_ways results are evaluated once: a second sink
+    over the same routed rows plans no osmpbf scan and still works with
+    the PBF file gone, and both sinks match the DuckDB oracle."""
+    path = str(tmp_path / "ep1.osm.pbf")
+    _write_ep1(path)
+    routed = poi_pipeline_routed(spark, path)
+    expected = sorted(duckdb.sql(ORACLE_POI_PIPELINE_FULL).fetchall())
+    assert _rows(routed) == expected  # first sink: evaluates both branches
+    os.remove(path)  # any re-decode would now fail
+    out = str(tmp_path / "second")
+    routed.write.parquet(out)
+    assert "BatchScan osmpbf" not in routed._jdf.queryExecution().executedPlan().toString()
+    assert _rows(spark.read.parquet(out).select(*routed.columns)) == expected
+
+
+def test_fresh_load_reads_rewritten_pbf(spark, tmp_path):
+    """A new load of a path rewritten in place sees the new entities:
+    nothing evaluated for the old file is reused."""
+    path = str(tmp_path / "ep1.osm.pbf")
+    _write_ep1(path)
+    before = _rows(poi_pipeline_routed(spark, path))
+    assert {t for t, *_ in before} == {"node", "way"}
+    _write_ep1(path, nodes=[n for n in fx.ep1_pbf_nodes() if n["id"] != 1], ways=[])
+    after = _rows(poi_pipeline_routed(spark, path))
+    assert after == [r for r in before if r[0] == "node" and r[1] != 1]

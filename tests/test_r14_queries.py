@@ -1,6 +1,7 @@
-"""Round-14 pins: the three new registrations (minhash cap audit + the
-two streaming sampling twins), the r14 driver window composition, and
-the r13-verdict #5 self-tuning route of curation_with_neardup."""
+"""Round-14 pins: the three r14 registrations (minhash cap audit + the
+two streaming sampling twins), the driver-window policy for queries
+changed this round, and the r13-verdict #5 self-tuning route of
+curation_with_neardup."""
 
 from __future__ import annotations
 
@@ -13,46 +14,23 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_r14_registrations_in_window():
-    """The three r14 registrations must lead the driver's 50-entry
-    window; the two streaming twins reuse their batch twins' oracles
-    VERBATIM (the property the r13 differential pins certified); the
-    one carried r08 query must be outside the window, everything else
-    from the r08 cohort inside."""
+def test_changed_this_round_leads_window():
+    """Every query in CHANGED_THIS_ROUND is registered, appears once and
+    sits in the driver's 50-entry window; the two streaming twins reuse
+    their batch twins' oracles VERBATIM (the property the r13
+    differential pins certified)."""
     from osm_poi_database_maker_spark import queries as q
     from osm_poi_database_maker_spark.queries import curation, events
 
-    names = list(q.QUERIES)
-    window = names[:50]
-    assert window[:8] == [
-        # tier 1a: the sf1.0-battery fixes needing fresh driver rows
-        "mm_image_features",
-        "part_promo_share",
-        "orders_snapshot_diff",
-        "brand_returnflag_pivot",
-        "events_session_overlap",
-        # tier 1b: the three new registrations
-        "doc_minhash_cap_audit",
-        "stream_reservoir_sample",
-        "stream_weighted_sample",
-    ]
+    window = list(q.QUERIES)[:50]
+    changed = q.CHANGED_THIS_ROUND
+    assert len(changed) == len(set(changed))
+    for n in changed:
+        assert n in q.QUERIES and n in q.ORACLES, n
+        assert n in window, n
     assert q.ORACLES["stream_reservoir_sample"] is events.ORACLE_RESERVOIR
     assert q.ORACLES["stream_weighted_sample"] is curation.ORACLE_WEIGHTED_SAMPLE
     assert "saturated_buckets" in q.ORACLES["doc_minhash_cap_audit"]
-    # the changed _range_pid queries already occupy r08-cohort slots
-    for n in ("doc_global_index", "doc_sequence_packing", "doc_quantile_normalize"):
-        assert n in window
-    # the six carried r08 queries (tier-1 takes 8 slots; 42+8=50)
-    for n in (
-        "customer_km_survival",
-        "orders_dow_chisq",
-        "orders_referential_integrity",
-        "nation_forecast_backtest",
-        "brand_weighted_median",
-        "supplier_return_pchart",
-    ):
-        assert n not in window
-    assert len(window) == len(set(window)) == 50
 
 
 def test_cap_audit_stock_fixture_unsaturated(spark, tmp_path):
